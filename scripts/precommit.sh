@@ -20,6 +20,13 @@
 #   ln -sf ../../scripts/precommit.sh .git/hooks/pre-commit
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# Self-containment gate: the tests and registered queries read only files
+# in the repository (the ETL example fixture lives in fixtures/example), so
+# no source may name the external reference checkout.
+if grep -rnF "/root/reference" src/; then
+  echo "[precommit] FAIL - the files above name /root/reference; use Purchases.ExampleDir or another in-repo path" >&2
+  exit 1
+fi
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
 echo "[precommit] OK - main + test sources compile"

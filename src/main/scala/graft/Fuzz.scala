@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fuzz.{DedupParamGen, QueryGen}
 import graft.util.JsonStr
 
@@ -24,16 +22,9 @@ object Fuzz {
     val n = args.lift(1).map(_.toInt).getOrElse(120)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(3).getOrElse("/tmp/graft_fuzz")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // rule-mode range-join draws differentially test RangeBinJoinRule
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // rule-mode range-join draws differentially test RangeBinJoinRule
+    val spark = LocalSession(LocalSession.cpus(8),
+      configure = _.withExtensions(new GraftExtensions))
     new java.io.File(outDir).mkdirs()
 
     // every sweep also draws n/8 dedup-PARAMETER queries (shingle sizes,

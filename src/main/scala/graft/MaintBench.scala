@@ -52,22 +52,16 @@ object MaintBench {
   /** The stored edge table exactly as the layout legs return it. */
   private def layoutReturn(spark: SparkSession, d: String): DataFrame = {
     val root = graft.queries.PageRankLayout.layoutRoot(d)
-    val g = spark.read.parquet(s"$root/meta").head().getAs[Long]("last_gen")
+    val g = graft.util.GenStore.lastGen(graft.util.GenStore.metaAt(spark, root))
     spark.read.parquet(s"$root/v=$g/edges")
       .select("src", "dst", "wn").orderBy("src", "dst")
   }
 
   /** The stored code table exactly as the ANN legs return it — resolved
     * through the committed generation's cell manifest like any reader. */
-  private def annReturn(spark: SparkSession, d: String): DataFrame = {
-    val root = graft.similarity.Similarity.annIndexRoot(d)
-    val g = spark.read.parquet(s"$root/meta").head().getAs[Long]("last_gen")
-    val live = spark.read.parquet(s"$root/cells/v=$g")
-      .collect().map(r => (r.getAs[Long]("gen"), r.getAs[Int]("c_id"))).toSeq
-    spark.read.option("basePath", s"$root/codes")
-      .parquet(live.map { case (gg, c) => s"$root/codes/gen=$gg/c_id=$c" }: _*)
-      .select("vec_id", "c_id", "s", "code").orderBy("vec_id", "s")
-  }
+  private def annReturn(spark: SparkSession, d: String): DataFrame =
+    graft.similarity.Similarity.storedCodes(spark,
+      graft.similarity.Similarity.annIndexRoot(d))
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -78,15 +72,8 @@ object MaintBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
 
     import graft.queries.PageRankLayout
     import graft.similarity.Similarity

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 /** The reference ETL pipeline (SURVEY.md §2 Tier A), re-expressed Spark-first.
   *
-  * Reference semantics (all cites into /root/reference/):
+  * Reference semantics (all cites into the reference repository):
   *  - A1/A2: hourly headerless CSV of purchases, 5 positional columns
   *    `email,item_id,quantity,price,purchase_date`
   *    (cloud_function.py:121–122, data_generator.py:72–76).
@@ -34,6 +34,13 @@ import org.apache.spark.sql.types._
   * within a partition (see `writeOrderedPartitioned`).
   */
 object Purchases {
+
+  /** The reference's example input: three hourly CSVs, 2021-03-21T11–13,
+    * 318 + 178 + 413 rows. Vendored under `fixtures/example` (regenerated
+    * by `scripts/gen_example.py`, see its header) and resolved against the
+    * working directory, so run from the repository root as sbt does. */
+  val ExampleDir: String =
+    java.nio.file.Paths.get("fixtures", "example").toAbsolutePath.toString
 
   /** Raw positional schema — all strings, exactly as bytes arrive (A2). */
   val rawSchema: StructType = StructType(Seq(

@@ -6,7 +6,7 @@ import graft.QueryDef
 import graft.etl.Purchases
 
 /** The reference pipeline's own query surface (SURVEY.md §2 Tier A/B) run
-  * over the reference's example CSVs under /root/reference/example — the
+  * over the reference's example CSVs ([[Purchases.ExampleDir]]) — the
   * golden fixtures the tutorial ships (README.md:352–368).
   *
   * DuckDB has no sha1() (v1.0), so queries whose output contains the
@@ -28,7 +28,7 @@ import graft.etl.Purchases
   */
 object EtlQueries {
 
-  private val exampleDir = "/root/reference/example"
+  private val exampleDir = Purchases.ExampleDir
 
   /** DuckDB-side equivalent of readCsv: positional headerless CSV. */
   private val duckCsv =

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.{QueryDef, Tables}
-import graft.util.{ArtifactStore, CorpusFingerprint}
+import graft.util.{ArtifactStore, CorpusFingerprint, GenStore}
 import graft.util.CorpusFingerprint.Fp
 
 /** Persisted co-partitioned edge layout for PageRank — the build-once /
@@ -58,21 +58,17 @@ import graft.util.CorpusFingerprint.Fp
   *    ones, is REFUSED — a delete carrying the right row count but wrong
   *    partkeys would otherwise subtract pairs the layout never indexed
   *    and commit a corrupted generation behind a matching fingerprint.
-  *  - `meta` (at the root, one row) carries the staleness fingerprint —
-  *    row count PLUS an order-independent content hash over the
-  *    derivation columns (l_orderkey, l_partkey), see
-  *    [[graft.util.CorpusFingerprint]] — and `last_gen`, the highest
-  *    COMMITTED generation: readers resolve the current snapshot through
-  *    it (the "pointer" of a versioned table format), so a crash that
-  *    leaves a half-written next generation on disk can never leak into
-  *    answers — the replayed batch rewrites and then commits it.
-  *  - maintenance writes the NEXT generation while the current one stays
-  *    fully readable (a frame resolved before an append keeps scanning
-  *    the retained previous generation after it — asserted in
-  *    PageRankLayoutSpec), then commits meta and GARBAGE-COLLECTS only
+  *  - the commit protocol is [[graft.util.GenStore]], shared with the
+  *    ANN index: `meta` (one row at the root) is the pointer readers
+  *    resolve the committed generation through, and carries the
+  *    staleness fingerprint over (l_orderkey, l_partkey); maintenance
+  *    writes the NEXT generation while the current one stays fully
+  *    readable (a frame resolved before an append keeps scanning it —
+  *    asserted in PageRankLayoutSpec), commits meta, then deletes only
   *    generations two or more behind. Carried files survive GC of their
   *    original generation (hardlinks share the inode; copies are
-  *    independent).
+  *    independent). This object keeps the layout's legs, guards, bucket
+  *    carry and ledger.
   *
   * All store I/O goes through the Hadoop FileSystem API
   * ([[graft.util.ArtifactStore]]) — `file:`, `hdfs:` and `s3a:` roots all
@@ -105,12 +101,8 @@ import graft.util.CorpusFingerprint.Fp
   */
 object PageRankLayout {
 
-  private def tag(dataDir: String): String = {
-    val readable = dataDir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    // the readable tag is lossy (case folded, punctuation collapsed); the
-    // appended raw-path hash makes distinct corpora collision-free
-    f"${readable}_${scala.util.hashing.MurmurHash3.stringHash(dataDir)}%08x"
-  }
+  private def tag(dataDir: String): String =
+    GenStore.rootTag(dataDir, "[^A-Za-z0-9]", foldCase = true)
 
   /** Store-format version; bumping it makes every older on-disk layout
     * read as stale (ensureLayout rebuilds) instead of a maintenance op
@@ -136,15 +128,14 @@ object PageRankLayout {
   /** The committed generation the layout's "pointer" (meta.last_gen)
     * currently resolves to. */
   private[graft] def currentGen(spark: SparkSession, dataDir: String): Long =
-    spark.read.parquet(s"${layoutRoot(dataDir)}/meta").head().getAs[Long]("last_gen")
+    GenStore.lastGen(Store.readMeta(spark, dataDir))
 
   /** Current-generation stored edge frame — declares the table if this
     * session's catalog hasn't seen it yet (fresh JVM over surviving files). */
   private[graft] def currentEdges(spark: SparkSession, dataDir: String): DataFrame = {
-    val root = layoutRoot(dataDir)
-    val m = spark.read.parquet(s"$root/meta").head()
-    val g = m.getAs[Long]("last_gen")
-    declare(spark, edgesTable(dataDir, g), s"$root/v=$g/edges", "src",
+    val m = Store.readMeta(spark, dataDir)
+    val g = GenStore.lastGen(m)
+    declare(spark, edgesTable(dataDir, g), s"${layoutRoot(dataDir)}/v=$g/edges", "src",
       m.getAs[Int]("buckets"))
     spark.table(edgesTable(dataDir, g))
   }
@@ -175,19 +166,6 @@ object PageRankLayout {
     ()
   }
 
-  /** A frame whose optimized plan is a LITERALLY EMPTY local relation —
-    * the statically-empty legs ([[emptyLi]]) the pure append/delete paths
-    * pass. Driver-side plan inspection only: no Spark job, unlike
-    * `df.isEmpty`. A runtime-empty distributed frame (e.g. a CDC leg whose
-    * filter matched nothing) correctly reports false and pays its one
-    * stats job. */
-  private def isStaticallyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
-
   /** Drop any stale declaration, clear the location, write `df` bucketed
     * (and per-file sorted) by `key` as an EXTERNAL parquet table at `loc`.
     * Inputs already hash-partitioned on `key` with the same count land one
@@ -214,19 +192,6 @@ object PageRankLayout {
         s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
         s"LOCATION '$loc'")
     }
-
-  private def writeMeta(spark: SparkSession, root: String, nodeCount: Long,
-      buckets: Int, gen: Long, fp: Fp): Unit = {
-    import spark.implicits._
-    Seq((fp.count, nodeCount, buckets, fp.xorFp, fp.sumFp.toString, gen, LayoutVer))
-      .toDF("lineitem_count", "node_count", "buckets", "fp_xor", "fp_sum",
-        "last_gen", "layout_ver")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-  }
-
-  private def metaFp(m: Row): Fp =
-    Fp(m.getAs[Long]("lineitem_count"), m.getAs[Long]("fp_xor"),
-      new java.math.BigDecimal(m.getAs[String]("fp_sum")))
 
   /** Normalize an aggregated raw-weight edge frame: per-src total, one
     * w/tw division — exact small-integer doubles, so grouping order
@@ -263,14 +228,10 @@ object PageRankLayout {
     * sums and counts add), so neither the build nor a maintenance fold
     * pays a second corpus/batch-sized hash scan: the ledger the commit
     * writes anyway IS the fingerprint's partial aggregate. */
-  private def ledgerFp(ledger: DataFrame): Fp = {
-    val r = ledger.agg(
+  private def ledgerFp(ledger: DataFrame): Fp =
+    CorpusFingerprint.fromAgg(ledger.agg(
       sum(col("n_rows")).as("n"), expr("bit_xor(chash)").as("x"),
-      sum(col("csum")).as("s")).head()
-    Fp(if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1),
-      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
-  }
+      sum(col("csum")).as("s")).head(), 0)
 
   /** Scale-adaptive bucket count for a NEW layout build (round 22; guide
     * §2/§6 — derive partitioning from input size, not a constant). The
@@ -415,21 +376,17 @@ object PageRankLayout {
     // commit point: meta (fingerprint + pointer) lands only after every
     // generation table did — a crash before this line leaves the previous
     // generation committed and the half-written one invisible
-    writeMeta(spark, root, nodeCount, buckets, gen,
-      fp.getOrElse(ledgerFp(spark.read.parquet(s"$genRoot/orderkeys"))))
-    // GC: everything at or below gen-2 is unreachable (readers resolve
-    // through meta; the one retained predecessor covers frames resolved
-    // just before this commit). Carried files survive their origin
-    // generation's GC: hardlinks share the inode, copies are independent.
-    ArtifactStore.list(spark, root)
-      .filter(_.getPath.getName.startsWith("v="))
-      .flatMap(st => st.getPath.getName.stripPrefix("v=").toLongOption.map(_ -> st))
-      .filter(_._1 <= gen - 2)
-      .foreach { case (g, st) =>
-        dropTable(spark, edgesTable(dataDir, g))
-        dropTable(spark, nodesTable(dataDir, g))
-        ArtifactStore.delete(spark, st.getPath.toString)
-      }
+    Store.writeMeta(spark, dataDir,
+      fp.getOrElse(ledgerFp(spark.read.parquet(s"$genRoot/orderkeys"))), gen,
+      head = Seq("node_count" -> nodeCount, "buckets" -> buckets))
+    // Carried files survive their origin generation's GC: hardlinks share
+    // the inode, copies are independent.
+    GenStore.collectBelow(spark, root, gen, dropTables(spark, dataDir, _))
+  }
+
+  private def dropTables(spark: SparkSession, dataDir: String, gen: Long): Unit = {
+    dropTable(spark, edgesTable(dataDir, gen))
+    dropTable(spark, nodesTable(dataDir, gen))
   }
 
   /** One corpus-sized build pass over a CALLER-SUPPLIED (l_orderkey,
@@ -445,13 +402,7 @@ object PageRankLayout {
     val root = layoutRoot(dataDir)
     // a rebuild starts the generation clock over: drop every declared
     // generation table and clear the root
-    ArtifactStore.list(spark, root)
-      .filter(_.getPath.getName.startsWith("v="))
-      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
-      .foreach { g =>
-        dropTable(spark, edgesTable(dataDir, g))
-        dropTable(spark, nodesTable(dataDir, g))
-      }
+    GenStore.generations(spark, root).foreach { case (g, _) => dropTables(spark, dataDir, g) }
     ArtifactStore.delete(spark, root)
     val buckets = layoutBuckets(spark, li)
     val raw = Relational.coPurchaseEdgesFrom(li)
@@ -471,9 +422,6 @@ object PageRankLayout {
 
   def buildLayout(spark: SparkSession, dataDir: String): Unit =
     buildLayoutFrom(spark, dataDir, liProjection(spark, dataDir))
-
-  private def readMeta(spark: SparkSession, dataDir: String): Row =
-    spark.read.parquet(s"${layoutRoot(dataDir)}/meta").head()
 
   /** The unified maintenance core — ONE generation commit folding a
     * DELETE leg and an APPEND leg of ORDER-COMPLETE lineitem rows into
@@ -508,7 +456,7 @@ object PageRankLayout {
   private def maintainLayoutGen(spark: SparkSession, dataDir: String,
       meta: Row, delLi: DataFrame, addLi: DataFrame, gen: Long): Unit = {
     val root = layoutRoot(dataDir)
-    val last = meta.getAs[Long]("last_gen")
+    val last = GenStore.lastGen(meta)
     val buckets = meta.getAs[Int]("buckets")
     val del = delLi.select("l_orderkey", "l_partkey")
     val add = addLi.select("l_orderkey", "l_partkey")
@@ -526,9 +474,8 @@ object PageRankLayout {
         nOrders: Long, fp: Fp, obs: Set[Int])
     def legLedger(li: DataFrame): LegLedger = {
       val ledger = orderLedger(li)
-      if (isStaticallyEmpty(li))
-        LegLedger(ledger, cached = false, 0L,
-          Fp(0L, 0L, java.math.BigDecimal.ZERO), Set.empty)
+      if (GenStore.isStaticallyEmpty(li))
+        LegLedger(ledger, cached = false, 0L, CorpusFingerprint.Empty, Set.empty)
       else {
         val cached = ledger.persist()
         val r = cached.agg(
@@ -537,10 +484,7 @@ object PageRankLayout {
           sum(col("csum")).as("s"),
           collect_set(bucketOf(col("l_orderkey"), buckets)).as("obs")).head()
         LegLedger(cached, cached = true, r.getLong(0),
-          Fp(if (r.isNullAt(1)) 0L else r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            Option(r.getDecimal(3)).getOrElse(java.math.BigDecimal.ZERO)),
-          r.getSeq[Int](4).toSet)
+          CorpusFingerprint.fromAgg(r, 1), r.getSeq[Int](4).toSet)
       }
     }
     val delL = legLedger(del)
@@ -698,7 +642,7 @@ object PageRankLayout {
     // batch-sized hash scans
     commitGen(spark, dataDir, gen, normalized(merged.where(col("w") > 0)),
       ledgerTouched, buckets,
-      Some(metaFp(meta).unfold(delL.fp).fold(addL.fp)),
+      Some(Store.metaFp(meta).unfold(delL.fp).fold(addL.fp)),
       cow = Some(Cow(last, touched, touchedObs)))
     // the commit is durable: release the maintenance caches' blocks now
     // instead of leaving them to a driver GC cycle (the CC/maintenance
@@ -706,6 +650,31 @@ object PageRankLayout {
     merged.unpersist(false)
     delta.unpersist(false)
     Seq(delL, addL).foreach(l => if (l.cached) l.ledger.unpersist(false))
+  }
+
+  /** The layout's half of the generational commit protocol
+    * ([[graft.util.GenStore]] owns the rest): the maintenance core, the
+    * build, the (l_orderkey, l_partkey) fingerprint, and — when
+    * [[ensureLayout]] trusts the stored layout — this session's catalog
+    * declarations of the current generation. */
+  private object Store extends GenStore("layout", "buildLayout",
+      countCol = "lineitem_count", verCol = "layout_ver", ver = LayoutVer) {
+    def root(dataDir: String): String = layoutRoot(dataDir)
+    protected def emptyLeg(spark: SparkSession): DataFrame = emptyLi(spark)
+    protected def liveFp(spark: SparkSession, dataDir: String): Fp =
+      liFingerprint(liProjection(spark, dataDir))
+    protected def build(spark: SparkSession, dataDir: String): Unit =
+      buildLayout(spark, dataDir)
+    protected def maintain(spark: SparkSession, dataDir: String, meta: Row,
+        del: DataFrame, add: DataFrame, gen: Long): Unit =
+      maintainLayoutGen(spark, dataDir, meta, del, add, gen)
+    override protected def trusted(spark: SparkSession, dataDir: String,
+        m: Row): Unit = {
+      val gen = GenStore.lastGen(m)
+      val buckets = m.getAs[Int]("buckets")
+      declare(spark, edgesTable(dataDir, gen), s"${root(dataDir)}/v=$gen/edges", "src", buckets)
+      declare(spark, nodesTable(dataDir, gen), s"${root(dataDir)}/v=$gen/nodes", "id", buckets)
+    }
   }
 
   /** Fold an appended batch of ORDER-COMPLETE lineitem rows into the
@@ -718,11 +687,7 @@ object PageRankLayout {
     * on exactly that claim. An empty batch is a no-op (no generation
     * bump). */
   def appendLayout(spark: SparkSession, dataDir: String, batchLi: DataFrame): Unit =
-    if (!batchLi.isEmpty) {
-      val meta = readMeta(spark, dataDir)
-      maintainLayoutGen(spark, dataDir, meta, emptyLi(spark), batchLi,
-        gen = meta.getAs[Long]("last_gen") + 1L)
-    }
+    Store.append(spark, dataDir, batchLi)
 
   /** Retire a batch of ORDER-COMPLETE lineitem rows from the stored
     * layout — the inverse maintenance path. The caller supplies the full
@@ -733,11 +698,7 @@ object PageRankLayout {
     * touched buckets, and the fingerprint is UN-folded. The surviving
     * corpus is never rescanned or rehashed. An empty batch is a no-op. */
   def deleteLayout(spark: SparkSession, dataDir: String, batchLi: DataFrame): Unit =
-    if (!batchLi.isEmpty) {
-      val meta = readMeta(spark, dataDir)
-      maintainLayoutGen(spark, dataDir, meta, batchLi, emptyLi(spark),
-        gen = meta.getAs[Long]("last_gen") + 1L)
-    }
+    Store.delete(spark, dataDir, batchLi)
 
   /** Correct stored orders in place: ONE maintenance commit that retires
     * `delLi`'s orders (exact ledger match, content-hashed) and folds
@@ -747,62 +708,16 @@ object PageRankLayout {
     * Equivalent to deleteLayout + appendLayout but atomic: no
     * intermediate generation ever exposes the half-corrected graph. */
   def upsertLayout(spark: SparkSession, dataDir: String,
-      delLi: DataFrame, addLi: DataFrame): Unit = {
-    val meta = readMeta(spark, dataDir)
-    maintainLayoutGen(spark, dataDir, meta, delLi, addLi,
-      gen = meta.getAs[Long]("last_gen") + 1L)
-  }
-
-  private def batchMeta(spark: SparkSession, dataDir: String, what: String): Row = {
-    val root = layoutRoot(dataDir)
-    try spark.read.parquet(s"$root/meta").head()
-    catch {
-      case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
-        throw new IllegalStateException(
-          s"$what: no committed layout meta under $root — the layout must " +
-            "be built (buildLayout) before streaming maintenance can fold " +
-            "batches into it, and a missing meta under a surviving " +
-            "checkpoint means the store was wiped or repointed; refusing " +
-            "to guess", e)
-    }
-  }
-
-  /** batchId → generation mapping shared by the streaming maintenance
-    * entries (the build is generation 0): gen == last is a REPLAY of the
-    * committed batch — a complete no-op (neither fingerprint fold nor
-    * file write; asserted byte-for-byte in StreamingSpec); gen == last+1
-    * is the next expected batch; anything else means the checkpoint and
-    * the store diverged. Structured Streaming only ever re-delivers the
-    * most recent uncommitted batch under one checkpoint, so gen < last
-    * can only come from a recreated/swapped checkpoint — those batches'
-    * rows would be silently dropped by a blanket `<=` no-op (round-19
-    * ADVICE), so they FAIL FAST like the too-far-ahead case. Returns
-    * None for the replay no-op, Some(gen) to apply. */
-  private def streamGen(what: String, root: String, meta: Row,
-      batchId: Long): Option[Long] = {
-    val gen = batchId + 1L
-    val last = meta.getAs[Long]("last_gen")
-    if (gen == last) None
-    else if (gen == last + 1L) Some(gen)
-    else throw new IllegalStateException(
-      s"$what: layout at $root is at generation $last but the stream " +
-        s"delivered batchId=$batchId (gen $gen; valid: $last = replay, " +
-        s"${last + 1} = next): the streaming checkpoint was recreated or " +
-        "swapped against this layout; refusing to fork")
-  }
+      delLi: DataFrame, addLi: DataFrame): Unit =
+    Store.upsert(spark, dataDir, delLi, addLi)
 
   /** Streaming maintenance entry — fold one micro-batch of ORDER-COMPLETE
     * (l_orderkey, l_partkey) rows into the stored layout with REPLAY
-    * IDEMPOTENCE (see [[streamGen]] for the batchId → generation
-    * contract). An empty micro-batch still commits its (carried-through)
-    * generation so the mapping never desynchronizes. */
+    * IDEMPOTENCE (batchId → generation contract:
+    * [[graft.util.GenStore.mergeBatch]]). */
   def mergeLayoutBatch(spark: SparkSession, dataDir: String,
-      batchLi: DataFrame, batchId: Long): Unit = {
-    val meta = batchMeta(spark, dataDir, "mergeLayoutBatch")
-    streamGen("mergeLayoutBatch", layoutRoot(dataDir), meta, batchId).foreach {
-      gen => maintainLayoutGen(spark, dataDir, meta, emptyLi(spark), batchLi, gen)
-    }
-  }
+      batchLi: DataFrame, batchId: Long): Unit =
+    Store.mergeBatch(spark, dataDir, batchLi, batchId, "mergeLayoutBatch")
 
   /** Streaming CDC maintenance entry (round-19 verdict directive 4): one
     * micro-batch of MIXED (op, l_orderkey, l_partkey) rows — op `I`
@@ -810,55 +725,18 @@ object PageRankLayout {
     * delete (full deleted rows, the CDC delete shape), and an order
     * appearing under BOTH ops in one batch is an upsert — applied as ONE
     * generation commit with the same replay-idempotence contract as
-    * [[mergeLayoutBatch]]: a redelivered micro-batch (including a pure
-    * DELETE batch, which round 19 refused fail-loud) is a complete
-    * no-op. */
+    * [[mergeLayoutBatch]]. */
   def mergeLayoutCdcBatch(spark: SparkSession, dataDir: String,
-      batch: DataFrame, batchId: Long): Unit = {
-    val meta = batchMeta(spark, dataDir, "mergeLayoutCdcBatch")
-    streamGen("mergeLayoutCdcBatch", layoutRoot(dataDir), meta, batchId).foreach { gen =>
-      // isNull disjunct: `!isin` is NULL (not true) for a null op under
-      // three-valued logic, so a null-op row would otherwise bypass the
-      // tripwire and silently drop from both legs (round-20 ADVICE)
-      val bad = batch.where(col("op").isNull || !col("op").isin("I", "D"))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"mergeLayoutCdcBatch: unknown op '${bad.headOption.map(_.getAs[String]("op")).getOrElse("")}' — the CDC feed carries only I (insert) and D (delete)")
-      maintainLayoutGen(spark, dataDir, meta,
-        batch.where(col("op") === "D"), batch.where(col("op") === "I"), gen)
-    }
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    Store.mergeCdcBatch(spark, dataDir, batch, batchId, "mergeLayoutCdcBatch")
 
   /** Trust a stored layout only while its fingerprint — row count AND
     * order-independent content hash of (l_orderkey, l_partkey) — matches
     * the live corpus AND its on-disk format version is current; otherwise
-    * rebuild. One meta read; only the expected missing/corrupt-artifact
-    * failures mean "stale" (anything else — a permissions fault, a
-    * concurrent writer — propagates instead of silently triggering a
-    * corpus-sized rebuild). Always leaves this session's catalog holding
-    * the current generation's declarations. */
-  def ensureLayout(spark: SparkSession, dataDir: String): Unit = {
-    val root = layoutRoot(dataDir)
-    val stored: Option[(Fp, Int, Long)] =
-      try {
-        val m = spark.read.parquet(s"$root/meta").head()
-        // older format versions (or pre-version metas, whose getAs throws
-        // IllegalArgumentException below) read as stale → rebuild
-        if (m.getAs[Long]("layout_ver") != LayoutVer) None
-        else Some((metaFp(m), m.getAs[Int]("buckets"), m.getAs[Long]("last_gen")))
-      } catch {
-        // missing artifact or a meta row from an older schema: rebuild
-        case _: AnalysisException => None
-        case _: java.io.FileNotFoundException => None
-        case _: IllegalArgumentException => None
-      }
-    stored match {
-      case Some((fp, buckets, gen)) if fp.matches(liFingerprint(liProjection(spark, dataDir))) =>
-        declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges", "src", buckets)
-        declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes", "id", buckets)
-      case _ => buildLayout(spark, dataDir)
-    }
-  }
+    * rebuild ([[graft.util.GenStore.ensure]]). Always leaves this
+    * session's catalog holding the current generation's declarations. */
+  def ensureLayout(spark: SparkSession, dataDir: String): Unit =
+    Store.ensure(spark, dataDir)
 
   /** Write one iteration's rank vector bucketed by id — the zero-Exchange
     * join feed AND the iteration's materialization barrier. */
@@ -893,11 +771,10 @@ object PageRankLayout {
   def fromLayoutRanks(spark: SparkSession, dataDir: String, iters: Int = 3,
       checkpointDir: Option[String] = None): DataFrame = {
     ensureLayout(spark, dataDir)
-    val root = layoutRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = Store.readMeta(spark, dataDir)
     val cnt = meta.getAs[Long]("node_count")
     val buckets = meta.getAs[Int]("buckets")
-    val gen = meta.getAs[Long]("last_gen")
+    val gen = GenStore.lastGen(meta)
     val edgesN = spark.table(edgesTable(dataDir, gen))
     val nodes = spark.table(nodesTable(dataDir, gen))
     val ckpt = checkpointDir.map(d => graft.util.IterativeCheckpointer(Some(d)))

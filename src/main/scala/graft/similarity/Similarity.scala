@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
 import graft.Tables.SpreadOps
+import graft.util.GenStore
 
 /** C18 — similarity search over `embeddings.embedding` (array<float>).
   *
@@ -1314,8 +1315,7 @@ object Similarity {
     * is identical either way), and all store I/O goes through the Hadoop
     * FileSystem API (round-19 verdict directive 3). */
   def annIndexRoot(dataDir: String): String = {
-    val tag = dataDir.replaceAll("[^A-Za-z0-9._-]", "_") +
-      f"_${scala.util.hashing.MurmurHash3.stringHash(dataDir)}%08x"
+    val tag = GenStore.rootTag(dataDir, "[^A-Za-z0-9._-]", foldCase = false)
     s"${graft.util.ArtifactStore.artifactsRoot}/graft_ann_index/$tag/c${IdxC}_m${IdxM}_k${IdxK}_i$IdxIters"
   }
 
@@ -1326,24 +1326,6 @@ object Similarity {
     * directive 2). */
   private def embFingerprint(emb: DataFrame): graft.util.CorpusFingerprint.Fp =
     graft.util.CorpusFingerprint.of(emb, col("vec_id"), col("embedding"))
-
-  /** Persist the one-row meta table. `lastGen` is the highest COMMITTED
-    * generation: readers resolve the live (gen, c_id) partition set
-    * through generation `lastGen`'s cell manifest ([[readCellManifest]]),
-    * so a crash that leaves an uncommitted generation's files on disk
-    * cannot leak half-committed codes into answers — the replayed batch
-    * simply rewrites that generation and then commits it here (meta is
-    * the commit record; see [[mergeAnnIndexBatch]]). */
-  private def writeAnnMeta(spark: SparkSession, root: String, dims: Int,
-      sampleN: Long, sampleMax: Long, lastGen: Long,
-      fp: graft.util.CorpusFingerprint.Fp): Unit = {
-    import spark.implicits._
-    Seq((fp.count, dims, fp.xorFp, fp.sumFp.toString, sampleN, sampleMax,
-      lastGen, AnnFmt))
-      .toDF("corpus_count", "dims", "fp_xor", "fp_sum", "sample_n",
-        "sample_max", "last_gen", "fmt")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-  }
 
   /** The live (gen, c_id) code partitions as of generation `gen` — the
     * cell MANIFEST a versioned table format would keep in its snapshot
@@ -1369,10 +1351,6 @@ object Similarity {
     live.toDF("gen", "c_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/cells/v=$gen")
   }
-
-  private def annMetaFp(m: org.apache.spark.sql.Row): graft.util.CorpusFingerprint.Fp =
-    graft.util.CorpusFingerprint.Fp(m.getAs[Long]("corpus_count"),
-      m.getAs[Long]("fp_xor"), new java.math.BigDecimal(m.getAs[String]("fp_sum")))
 
   /** Build the integer IVF-PQ index for a corpus and persist it
     * (overwrite). One pass of corpus-sized work — the cost a 100 TB
@@ -1445,8 +1423,10 @@ object Similarity {
     writeCellManifest(spark, root, gen = 0L, builtCells.map(c => (0L, c)))
     // sample_n/sample_max pin WHICH rows trained the stored models — the
     // append guard's refusal boundary (see appendAnnIndex)
-    writeAnnMeta(spark, root, dims0, sample.length.toLong,
-      sample.map(_._1).max, lastGen = 0L, embFingerprint(emb))
+    AnnStore.writeMeta(spark, dataDir, embFingerprint(emb), gen = 0L,
+      head = Seq("dims" -> dims0),
+      tail = Seq("sample_n" -> sample.length.toLong,
+        "sample_max" -> sample.map(_._1).max))
     root
   }
 
@@ -1474,12 +1454,7 @@ object Similarity {
     * query `c18_ann_index_append` and the lifecycle fuzz respect the
     * boundary by construction. */
   def appendAnnIndex(spark: SparkSession, dataDir: String, batch: DataFrame): Unit =
-    if (!batch.isEmpty) {
-      val root = annIndexRoot(dataDir)
-      val meta = spark.read.parquet(s"$root/meta").head()
-      maintainAnnGen(spark, root, meta, emptyEmb(spark), batch,
-        gen = meta.getAs[Long]("last_gen") + 1L)
-    }
+    AnnStore.append(spark, dataDir, batch)
 
   private val codesSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("vec_id", LongType),
@@ -1498,7 +1473,7 @@ object Similarity {
     * bounded: one row per live partition (≤ commits × [[IdxC]]). */
   private def committedCodes(spark: SparkSession, root: String,
       meta: org.apache.spark.sql.Row): DataFrame = {
-    val live = readCellManifest(spark, root, meta.getAs[Long]("last_gen"))
+    val live = readCellManifest(spark, root, GenStore.lastGen(meta))
     if (live.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], codesSchema)
@@ -1512,18 +1487,22 @@ object Similarity {
     Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
   }
 
-  /** A frame whose optimized plan is a LITERALLY EMPTY local relation —
-    * the statically-empty legs ([[emptyEmb]]) the pure append/delete paths
-    * pass. Driver-side plan inspection only (no Spark job): a pure append
-    * or delete skips its empty leg's stats aggregate entirely, while a
-    * runtime-empty distributed frame (a CDC leg whose filter matched
-    * nothing) correctly reports false and pays its one stats job. */
-  private def isStaticallyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
+  /** The index's half of the generational commit protocol
+    * ([[graft.util.GenStore]] owns the rest): the maintenance core, the
+    * build and the (vec_id, embedding) fingerprint. */
+  private object AnnStore extends GenStore("index", "buildAnnIndex",
+      countCol = "corpus_count", verCol = "fmt", ver = AnnFmt) {
+    def root(dataDir: String): String = annIndexRoot(dataDir)
+    protected def emptyLeg(spark: SparkSession): DataFrame = emptyEmb(spark)
+    protected def liveFp(spark: SparkSession, dataDir: String): graft.util.CorpusFingerprint.Fp =
+      embFingerprint(Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding")))
+    protected def build(spark: SparkSession, dataDir: String): Unit = {
+      buildAnnIndex(spark, dataDir); ()
     }
+    protected def maintain(spark: SparkSession, dataDir: String,
+        meta: org.apache.spark.sql.Row, del: DataFrame, add: DataFrame, gen: Long): Unit =
+      maintainAnnGen(spark, dataDir, meta, del, add, gen)
+  }
 
   /** The unified maintenance core — ONE generation commit folding a
     * DELETE leg and an APPEND leg of (vec_id, embedding) rows into the
@@ -1564,9 +1543,10 @@ object Similarity {
     * must be absent from the committed index NET OF this batch's deletes
     * (so an upsert's re-encode of the same id passes) and unrepeated
     * within the batch. */
-  private def maintainAnnGen(spark: SparkSession, root: String,
+  private def maintainAnnGen(spark: SparkSession, dataDir: String,
       meta: org.apache.spark.sql.Row, delRows: DataFrame, addRows: DataFrame,
       gen: Long): Unit = {
+    val root = annIndexRoot(dataDir)
     val del = delRows.select(col("vec_id"), col("embedding"))
     val add = addRows.select(col("vec_id"), col("embedding"))
     val sampleN = meta.getAs[Long]("sample_n")
@@ -1598,21 +1578,16 @@ object Similarity {
     final case class Leg(n: Long, nDistinct: Long,
         fp: graft.util.CorpusFingerprint.Fp, nInSample: Long)
     def legStats(df: DataFrame): Leg =
-      if (isStaticallyEmpty(df))
-        Leg(0L, 0L, graft.util.CorpusFingerprint.Fp(0L, 0L,
-          java.math.BigDecimal.ZERO), 0L)
+      if (GenStore.isStaticallyEmpty(df)) Leg(0L, 0L, graft.util.CorpusFingerprint.Empty, 0L)
       else {
         val r = df
           .select(col("vec_id"), xxhash64(col("vec_id"), col("embedding")).as("h"))
-          .agg(count(lit(1)).as("n"), count_distinct(col("vec_id")).as("nd"),
-            expr("bit_xor(h)").as("x"),
+          .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"),
             sum(col("h").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"),
+            count_distinct(col("vec_id")).as("nd"),
             sum(when(inSample(col("vec_id")), 1L).otherwise(0L)).as("off"))
           .head()
-        Leg(r.getLong(0), r.getLong(1),
-          graft.util.CorpusFingerprint.Fp(r.getLong(0),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            Option(r.getDecimal(3)).getOrElse(java.math.BigDecimal.ZERO)),
+        Leg(r.getLong(0), r.getLong(3), graft.util.CorpusFingerprint.fromAgg(r, 0),
           if (r.isNullAt(4)) 0L else r.getLong(4))
       }
     val delLeg = legStats(del)
@@ -1721,25 +1696,39 @@ object Similarity {
         val out = df.persist()
         val cells = out.agg(collect_set(col("c_id")).as("cs"))
           .head().getSeq[Int](0).sorted
-        out.withColumn("gen", lit(gen))
-          .repartition(col("c_id"))
-          .sortWithinPartitions("vec_id", "s")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen", "c_id").parquet(s"$root/codes")
+        writeCodeGen(out, root, gen)
         out.unpersist(false)
         cells
     }
-    // commit: manifest (live = previous − touched + written), then meta
-    val last = meta.getAs[Long]("last_gen")
-    val prevLive = readCellManifest(spark, root, last)
-    val newLive = prevLive.filterNot(touched.toSet) ++ writtenCells.map(c => (gen, c))
-    writeCellManifest(spark, root, gen, newLive)
+    // commit: manifest (live = previous − touched + written), then meta;
     // the fingerprint transition folds the leg aggregates already computed
     // above — no further batch-sized hash scans
-    writeAnnMeta(spark, root, meta.getAs[Int]("dims"), sampleN, sampleMax,
-      lastGen = gen,
-      annMetaFp(meta).unfold(delLeg.fp).fold(addLeg.fp))
+    val prevLive = readCellManifest(spark, root, GenStore.lastGen(meta))
+    val newLive = prevLive.filterNot(touched.toSet) ++ writtenCells.map(c => (gen, c))
+    commitAnnGen(spark, dataDir, meta, gen, prevLive, newLive,
+      AnnStore.metaFp(meta).unfold(delLeg.fp).fold(addLeg.fp))
+  }
+
+  /** Write (vec_id, s, code, c_id) rows as generation `gen`'s
+    * `gen=G/c_id=C` partitions in DYNAMIC overwrite mode: a replay at the
+    * same gen replaces only its own partitions. */
+  private def writeCodeGen(df: DataFrame, root: String, gen: Long): Unit =
+    df.withColumn("gen", lit(gen)).repartition(col("c_id"))
+      .sortWithinPartitions("vec_id", "s")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("gen", "c_id").parquet(s"$root/codes")
+
+  /** Commit generation `gen`: its cell manifest, then meta (the pointer,
+    * carrying the model-pinning columns over from `meta`), then GC. */
+  private def commitAnnGen(spark: SparkSession, dataDir: String,
+      meta: org.apache.spark.sql.Row, gen: Long, prevLive: Seq[(Long, Int)],
+      newLive: Seq[(Long, Int)], fp: graft.util.CorpusFingerprint.Fp): Unit = {
+    val root = annIndexRoot(dataDir)
+    writeCellManifest(spark, root, gen, newLive)
+    AnnStore.writeMeta(spark, dataDir, fp, gen,
+      head = Seq("dims" -> meta.getAs[Int]("dims")),
+      tail = Seq("sample_n" -> meta.getAs[Long]("sample_n"),
+        "sample_max" -> meta.getAs[Long]("sample_max")))
     gcAnn(spark, root, (newLive ++ prevLive).toSet, gen)
   }
 
@@ -1759,12 +1748,7 @@ object Similarity {
               graft.util.ArtifactStore.delete(spark, cellDir.getPath.toString)
           }
       }
-    graft.util.ArtifactStore.list(spark, s"$root/cells")
-      .flatMap(st => st.getPath.getName.stripPrefix("v=").toLongOption.map(_ -> st))
-      .filter(_._1 <= gen - 2)
-      .foreach { case (_, st) =>
-        graft.util.ArtifactStore.delete(spark, st.getPath.toString)
-      }
+    GenStore.collectBelow(spark, s"$root/cells", gen)
   }
 
   /** Rewrite the live cell set into ONE fresh generation and let the
@@ -1787,104 +1771,37 @@ object Similarity {
     * commit); an index already at one live generation is a no-op. */
   def compactAnnIndex(spark: SparkSession, dataDir: String): Unit = {
     val root = annIndexRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
-    val last = meta.getAs[Long]("last_gen")
+    val meta = AnnStore.readMeta(spark, dataDir)
+    val last = GenStore.lastGen(meta)
     val prevLive = readCellManifest(spark, root, last)
     if (prevLive.map(_._1).distinct.size > 1) {
       val gen = last + 1L
-      committedCodes(spark, root, meta)
-        .select(col("vec_id"), col("s"), col("code"), col("c_id"))
-        .withColumn("gen", lit(gen))
-        .repartition(col("c_id"))
-        .sortWithinPartitions("vec_id", "s")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen", "c_id").parquet(s"$root/codes")
+      writeCodeGen(committedCodes(spark, root, meta)
+        .select(col("vec_id"), col("s"), col("code"), col("c_id")), root, gen)
       val newLive = prevLive.map(_._2).distinct.sorted.map(c => (gen, c))
-      writeCellManifest(spark, root, gen, newLive)
-      writeAnnMeta(spark, root, meta.getAs[Int]("dims"),
-        meta.getAs[Long]("sample_n"), meta.getAs[Long]("sample_max"),
-        lastGen = gen, annMetaFp(meta))
-      gcAnn(spark, root, (newLive ++ prevLive).toSet, gen)
+      commitAnnGen(spark, dataDir, meta, gen, prevLive, newLive, AnnStore.metaFp(meta))
     }
-  }
-
-  private def streamBatchMeta(spark: SparkSession, root: String,
-      what: String): org.apache.spark.sql.Row =
-    try spark.read.parquet(s"$root/meta").head()
-    catch {
-      case e @ (_: org.apache.spark.sql.AnalysisException |
-                _: java.io.FileNotFoundException) =>
-        throw new IllegalStateException(
-          s"$what: no committed index meta under $root — the " +
-            "index must be built (buildAnnIndex) before streaming " +
-            "maintenance can fold batches into it, and a missing meta " +
-            "under a surviving checkpoint means the index store was " +
-            "wiped or repointed; refusing to guess", e)
-    }
-
-  /** batchId → generation mapping shared by the streaming maintenance
-    * entries (the build is generation 0): gen == last_gen is a REPLAY of
-    * the committed batch — a complete no-op (fingerprint, meta, manifest
-    * and code files all untouched, asserted byte-for-byte in
-    * StreamingSpec); gen == last_gen + 1 is the next expected batch.
-    * Structured Streaming only re-delivers the most recent uncommitted
-    * batch under one checkpoint, so gen < last_gen can only come from a
-    * recreated/swapped checkpoint — a blanket `<=` no-op would silently
-    * drop those batches' rows (round-19 ADVICE), so they FAIL FAST like
-    * the too-far-ahead case. */
-  private def annStreamGen(what: String, root: String,
-      meta: org.apache.spark.sql.Row, batchId: Long): Option[Long] = {
-    val gen = batchId + 1L
-    val last = meta.getAs[Long]("last_gen")
-    if (gen == last) None
-    else if (gen == last + 1L) Some(gen)
-    else throw new IllegalStateException(
-      s"$what: index at $root is at generation $last but the " +
-        s"stream delivered batchId=$batchId (gen $gen; valid: $last = " +
-        s"replay, ${last + 1} = next): the streaming checkpoint was " +
-        "recreated or swapped against this index; refusing to fork")
   }
 
   /** Streaming maintenance entry (round-18 verdict directive 1): fold one
     * micro-batch of (vec_id, embedding) APPEND rows into the stored index
-    * with REPLAY IDEMPOTENCE (see [[annStreamGen]] for the batchId →
-    * generation contract; [[maintainAnnGen]]'s dynamic-overwrite write +
-    * meta-last commit make the crash windows replay-safe). An empty
-    * micro-batch still commits its (carried-through) generation so the
-    * mapping never desynchronizes. */
+    * with REPLAY IDEMPOTENCE (batchId → generation contract:
+    * [[graft.util.GenStore.mergeBatch]]; [[maintainAnnGen]]'s
+    * dynamic-overwrite write + meta-last commit make the crash windows
+    * replay-safe). */
   def mergeAnnIndexBatch(spark: SparkSession, dataDir: String,
-      batch: DataFrame, batchId: Long): Unit = {
-    val root = annIndexRoot(dataDir)
-    val meta = streamBatchMeta(spark, root, "mergeAnnIndexBatch")
-    annStreamGen("mergeAnnIndexBatch", root, meta, batchId).foreach { gen =>
-      maintainAnnGen(spark, root, meta, emptyEmb(spark), batch, gen)
-    }
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    AnnStore.mergeBatch(spark, dataDir, batch, batchId, "mergeAnnIndexBatch")
 
   /** Streaming CDC maintenance entry (round-19 verdict directive 4): one
     * micro-batch of MIXED (op, vec_id, embedding) rows — op `I` appends,
     * op `D` deletes (full deleted rows, the CDC delete shape), and an id
     * under BOTH ops in one batch is an upsert — applied as ONE generation
     * commit with the same replay-idempotence contract as
-    * [[mergeAnnIndexBatch]]: a redelivered micro-batch (including a pure
-    * DELETE batch, which round 19 refused fail-loud) is a complete
-    * no-op. */
+    * [[mergeAnnIndexBatch]]. */
   def mergeAnnCdcBatch(spark: SparkSession, dataDir: String,
-      batch: DataFrame, batchId: Long): Unit = {
-    val root = annIndexRoot(dataDir)
-    val meta = streamBatchMeta(spark, root, "mergeAnnCdcBatch")
-    annStreamGen("mergeAnnCdcBatch", root, meta, batchId).foreach { gen =>
-      // isNull disjunct: `!isin` is NULL (not true) for a null op under
-      // three-valued logic, so a null-op row would otherwise bypass the
-      // tripwire and silently drop from both legs (round-20 ADVICE)
-      val bad = batch.where(col("op").isNull || !col("op").isin("I", "D"))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"mergeAnnCdcBatch: unknown op '${bad.headOption.map(_.getAs[String]("op")).getOrElse("")}' — the CDC feed carries only I (insert) and D (delete)")
-      maintainAnnGen(spark, root, meta,
-        batch.where(col("op") === "D"), batch.where(col("op") === "I"), gen)
-    }
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    AnnStore.mergeCdcBatch(spark, dataDir, batch, batchId, "mergeAnnCdcBatch")
 
   /** Delete a batch of rows from the stored index — the inverse
     * maintenance path. The caller supplies the FULL deleted rows (vec_id
@@ -1906,12 +1823,7 @@ object Similarity {
     * verdict directive 2). An empty batch is a no-op (round-19 ADVICE:
     * it previously crashed on an empty partition-predicate reduce). */
   def deleteAnnIndex(spark: SparkSession, dataDir: String, deleted: DataFrame): Unit =
-    if (!deleted.isEmpty) {
-      val root = annIndexRoot(dataDir)
-      val meta = spark.read.parquet(s"$root/meta").head()
-      maintainAnnGen(spark, root, meta, deleted, emptyEmb(spark),
-        gen = meta.getAs[Long]("last_gen") + 1L)
-    }
+    AnnStore.delete(spark, dataDir, deleted)
 
   /** Correct stored vectors in place: ONE maintenance commit that retires
     * `deleted`'s rows and folds `added`'s replacements — the CDC
@@ -1922,40 +1834,18 @@ object Similarity {
     * the SAME vec_id with new content is legal (the append guard nets out
     * this batch's deletes). */
   def upsertAnnIndex(spark: SparkSession, dataDir: String,
-      deleted: DataFrame, added: DataFrame): Unit = {
-    val root = annIndexRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
-    maintainAnnGen(spark, root, meta, deleted, added,
-      gen = meta.getAs[Long]("last_gen") + 1L)
-  }
+      deleted: DataFrame, added: DataFrame): Unit =
+    AnnStore.upsert(spark, dataDir, deleted, added)
 
-  /** Query-many side of the staleness contract: trust a stored index only
-    * if its meta fingerprint — row count AND order-independent content
-    * hash of (vec_id, embedding) — matches the live corpus; otherwise
-    * (missing or stale) rebuild. The content check is one column-pruned
-    * partial-aggregated pass (see [[graft.util.CorpusFingerprint]] for the
-    * cost contract and the production-catalog alternative); a stale index
-    * can therefore never silently serve a changed corpus, even a
-    * same-count change. Meta is read once; only the expected
-    * missing/old-schema artifact failures mean "stale" — anything else
-    * propagates instead of silently triggering a corpus-sized rebuild. */
+  /** Query-many side of the staleness contract
+    * ([[graft.util.GenStore.ensure]]): trust a stored index only while its
+    * fingerprint — row count AND order-independent content hash of
+    * (vec_id, embedding), one column-pruned pass, see
+    * [[graft.util.CorpusFingerprint]] — matches the live corpus, so even a
+    * same-count change is never served stale; otherwise rebuild. */
   def ensureAnnIndex(spark: SparkSession, dataDir: String): String = {
-    val root = annIndexRoot(dataDir)
-    val stored: Option[graft.util.CorpusFingerprint.Fp] =
-      try {
-        val m = spark.read.parquet(s"$root/meta").head()
-        // older on-disk formats (or pre-version metas, whose getAs throws
-        // IllegalArgumentException below) read as stale → rebuild
-        if (m.getAs[Long]("fmt") != AnnFmt) None else Some(annMetaFp(m))
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-        case _: java.io.FileNotFoundException => None
-        case _: IllegalArgumentException => None
-      }
-    val live = embFingerprint(
-      Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding")))
-    if (!stored.exists(_.matches(live))) buildAnnIndex(spark, dataDir)
-    root
+    AnnStore.ensure(spark, dataDir)
+    annIndexRoot(dataDir)
   }
 
   /** Answer IVF-PQ queries FROM the persisted index — the 100 TB hot path.
@@ -1974,7 +1864,7 @@ object Similarity {
     import spark.implicits._
     val root = ensureAnnIndex(spark, dataDir)
     val emb = Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding"))
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = GenStore.metaAt(spark, root)
     val dsub = meta.getAs[Int]("dims") / IdxM
     val booksDf = broadcast(spark.read.parquet(s"$root/books"))
     // (vec_id, s, code) + (gen, c_id) partitions; only COMMITTED
@@ -2040,8 +1930,8 @@ object Similarity {
       |FROM codes cd JOIN final_assign f USING (vec_id)
       |ORDER BY vec_id, s""".stripMargin
 
-  private def storedCodes(s: SparkSession, root: String): DataFrame =
-    committedCodes(s, root, s.read.parquet(s"$root/meta").head())
+  private[graft] def storedCodes(s: SparkSession, root: String): DataFrame =
+    committedCodes(s, root, GenStore.metaAt(s, root))
       .select(col("vec_id"), col("c_id"), col("s"), col("code"))
       .orderBy("vec_id", "s")
 

@@ -25,7 +25,9 @@ import org.apache.spark.sql.SparkSession
   *  partition), and the single commit point is overwriting the small
   *  `meta` pointer — readers resolve through it, so a crash before the
   *  meta write leaves the previous generation fully readable and the
-  *  half-written one invisible. No rename of data files anywhere.
+  *  half-written one invisible. No rename of data files anywhere. The
+  *  protocol itself, and the window the non-atomic meta overwrite still
+  *  leaves, is documented on [[GenStore]].
   *
   * Carried (copy-on-write) files: a maintenance commit reuses every
   * bucket file its delta does not touch. On the local filesystem the

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -57,16 +57,22 @@ object CorpusFingerprint {
         sumFp.compareTo(other.sumFp) == 0
   }
 
+  /** The identity fingerprint: an empty row set, [[Fp.fold]]'s unit. */
+  val Empty: Fp = Fp(0L, 0L, java.math.BigDecimal.ZERO)
+
+  /** The fingerprint held in an aggregate row's count, bit_xor and
+    * DECIMAL-sum columns at `at`, `at + 1`, `at + 2`. Over ZERO rows
+    * count/sum of counts, bit_xor and sum can all be null — an empty row
+    * set has the identity fingerprint, not an NPE out of Row.getLong. */
+  def fromAgg(r: Row, at: Int): Fp =
+    Fp(if (r.isNullAt(at)) 0L else r.getLong(at),
+      if (r.isNullAt(at + 1)) 0L else r.getLong(at + 1),
+      Option(r.getDecimal(at + 2)).getOrElse(java.math.BigDecimal.ZERO))
+
   /** Compute the fingerprint of `df` over `keyCols` — one aggregate job. */
-  def of(df: DataFrame, keyCols: Column*): Fp = {
-    val r = df.select(xxhash64(keyCols: _*).as("h"))
+  def of(df: DataFrame, keyCols: Column*): Fp =
+    fromAgg(df.select(xxhash64(keyCols: _*).as("h"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"),
         sum(col("h").cast(DecimalType(38, 0))).as("s"))
-      .head()
-    // bit_xor/sum over ZERO rows both return null — an empty corpus has
-    // the well-defined identity fingerprint (0, 0, 0), consistent with
-    // Fp.fold's unit, not an NPE out of Row.getLong
-    Fp(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
-  }
+      .head(), 0)
 }

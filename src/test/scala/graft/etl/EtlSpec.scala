@@ -10,7 +10,7 @@ import graft.SparkSpec
   * semantics (A7 vs A8), error-tolerant sink, generator distributions. */
 class EtlSpec extends SparkSpec {
 
-  private val exampleDir = "/root/reference/example"
+  private val exampleDir = Purchases.ExampleDir
 
   /** hashlib.sha1("hrrlmu@example.com").hexdigest() — first row of
     * example/2021-03-21T11.csv; computed independently via JDK. */

@@ -15,7 +15,7 @@ class JdbcSinkSpec extends SparkSpec {
   private val url = "jdbc:derby:memory:graftjdbc;create=true"
 
   test("A10: batched JDBC append lands every row in an embedded database") {
-    val df = Purchases.etl(spark, "/root/reference/example")
+    val df = Purchases.etl(spark, Purchases.ExampleDir)
     Sinks.writeJdbc(df, url, "purchases_jdbc", user = "app", password = "app",
       batchSize = 100)
     val back = spark.read.format("jdbc")
